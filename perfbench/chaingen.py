@@ -23,15 +23,17 @@ Benchmark control endpoints (not part of the node surface):
 - ``GET /bench/stats`` returns request counts per endpoint, accepted
   connections, the head, due times and how late the ticker ran.
 
-Requests are handled by a pool of ``--workers`` threads (default: nproc).
-Start-up writes a manifest of expected per-height counts (``--manifest``)
-and, optionally, the chain as two JSON-lines files (``--dump``) for writing a
-block lake.  When ready, prints ``READY <port>`` on stdout.
+Each connection gets a thread and is kept alive between requests (HTTP/1.1,
+as a Tendermint node serves them); at most nproc requests are handled at
+once, so idle keep-alive connections hold no handler.  Start-up writes a
+manifest of expected per-height counts (``--manifest``) and, optionally, the
+chain as two JSON-lines files (``--dump``) for writing a block lake.  When
+ready, prints ``READY <port>`` on stdout.
 
 Usage::
 
     python3 perfbench/chaingen.py --seed 1 --count 4000 \\
-        --manifest work/manifest.json [--dump work/chain] [--workers 4]
+        --manifest work/manifest.json [--dump work/chain]
 """
 
 from __future__ import annotations
@@ -44,9 +46,8 @@ import random
 import threading
 import time
 import urllib.parse
-from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta, timezone
-from http.server import BaseHTTPRequestHandler, HTTPServer
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 CHAIN_ID = "bench-chain-1"
 GENESIS = datetime(2021, 6, 1, tzinfo=timezone.utc)
@@ -68,6 +69,9 @@ EVENTS_PER_TX = (1, 4)
 ATTRS_PER_EVENT = (1, 3)
 ERRORED_TX_SHARE = 0.10
 NULL_VALUE_SHARE = 0.05
+
+#: requests handled at once, one per core the benchmark may use
+HANDLERS = len(os.sched_getaffinity(0))
 
 
 # ---------------------------------------------------------------------------
@@ -199,7 +203,7 @@ def render_block(seed: int, height: int) -> tuple[str, str, dict]:
 class ChainServer:
     """Heights 1..count, rendered up front and served over HTTP."""
 
-    def __init__(self, seed: int, count: int, head: int | None, workers: int):
+    def __init__(self, seed: int, count: int, head: int | None):
         self.first, self.last = 1, count
         self.blocks: dict[int, bytes] = {}
         self.results: dict[int, bytes] = {}
@@ -213,7 +217,7 @@ class ChainServer:
         self.due: dict[int, float] = {}
         self.late_ms_max = 0.0
         self._lock = threading.Lock()
-        self._pool = ThreadPoolExecutor(max_workers=workers)
+        self._handlers = threading.BoundedSemaphore(HANDLERS)
         self._ticker: threading.Thread | None = None
         self._srv = self._make_server()
         self.port = self._srv.server_address[1]
@@ -222,34 +226,29 @@ class ChainServer:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"
+
             def log_message(self, *a):
                 pass
 
             def do_GET(self):
-                code, body = outer.route(self.path)
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
+                with outer._handlers:
+                    code, body = outer.route(self.path)
+                    self.send_response(code)
+                    self.send_header("Content-Type", "application/json")
+                    self.send_header("Content-Length", str(len(body)))
+                    self.end_headers()
+                    self.wfile.write(body)
 
-        class Server(HTTPServer):
-            """Accepts on one thread; ``workers`` pool threads handle requests."""
+        class Server(ThreadingHTTPServer):
+            """One thread per connection; counts accepted connections."""
 
             request_queue_size = 128
 
             def process_request(self, request, client_address):
                 with outer._lock:
                     outer.connections += 1
-                outer._pool.submit(self._handle, request, client_address)
-
-            def _handle(self, request, client_address):
-                try:
-                    self.finish_request(request, client_address)
-                except Exception:
-                    self.handle_error(request, client_address)
-                finally:
-                    self.shutdown_request(request)
+                super().process_request(request, client_address)
 
         return Server(("127.0.0.1", 0), Handler)
 
@@ -294,16 +293,20 @@ class ChainServer:
         t0 = time.time()
 
         def tick():
-            start = self.head
-            for k in range(1, count + 1):
-                due = t0 + k / rate
-                delay = due - time.time()
+            start, k = self.head, 0
+            while k < count:
+                delay = t0 + (k + 1) / rate - time.time()
                 if delay > 0:
                     time.sleep(delay)
+                now = time.time()
+                # every block due by now appears in one head move, so a burst
+                # is never seen half produced
                 with self._lock:
+                    while k < count and t0 + (k + 1) / rate <= now:
+                        k += 1
+                        self.due[start + k] = t0 + k / rate
+                        self.late_ms_max = max(self.late_ms_max, (now - self.due[start + k]) * 1000.0)
                     self.head = start + k
-                    self.due[start + k] = due
-                    self.late_ms_max = max(self.late_ms_max, (time.time() - due) * 1000.0)
 
         self._ticker = threading.Thread(target=tick, daemon=True)
         self._ticker.start()
@@ -317,12 +320,11 @@ def main() -> None:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--count", type=int, required=True)
     ap.add_argument("--head", type=int, default=None, help="initial head (default: last height)")
-    ap.add_argument("--workers", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--dump", default=None, help="directory for blocks/ and block_results/ JSON lines")
     args = ap.parse_args()
 
-    srv = ChainServer(args.seed, args.count, args.head, args.workers)
+    srv = ChainServer(args.seed, args.count, args.head)
     manifest = {
         "seed": args.seed,
         "first": srv.first,

@@ -23,6 +23,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 NPROC = len(os.sched_getaffinity(0))
 #: how long the generator may take to render its chain and start listening
 GENERATOR_READY_S = 120.0
+#: how often the memory sampler reads /proc
+RSS_INTERVAL_S = 0.2
+#: how long stopping the session may wait for the JVM and its Python workers
+STOP_TIMEOUT_S = 30.0
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +59,7 @@ class Generator:
         self.manifest_path = os.path.join(work, "manifest.json")
         self.dump_dir = os.path.join(work, "chain") if dump else None
         cmd = [sys.executable, os.path.join(HERE, "chaingen.py"), "--seed", str(seed),
-               "--count", str(count), "--workers", str(NPROC), "--manifest", self.manifest_path]
+               "--count", str(count), "--manifest", self.manifest_path]
         if head is not None:
             cmd += ["--head", str(head)]
         if self.dump_dir:
@@ -135,7 +139,7 @@ def start_session(work: str):
     return spark
 
 
-def stop_session(spark, timeout: float = 30.0) -> None:
+def stop_session(spark) -> None:
     """Stops the session, then the JVM, and waits until the JVM and every
     Python worker it started have exited."""
     from pyspark import SparkContext
@@ -150,11 +154,11 @@ def stop_session(spark, timeout: float = 30.0) -> None:
     SparkContext._jvm = None
     proc.stdin.close()  # the JVM exits when its stdin closes
     try:
-        proc.wait(timeout=timeout)
+        proc.wait(timeout=STOP_TIMEOUT_S)
     except subprocess.TimeoutExpired:
         proc.kill()
         proc.wait()
-    deadline = time.time() + timeout
+    deadline = time.time() + STOP_TIMEOUT_S
     while _children_map().get(os.getpid()) and time.time() < deadline:
         time.sleep(0.1)
 
@@ -221,8 +225,7 @@ class RssSampler:
     """Peak resident memory of this process tree (driver, JVM, Python
     workers), excluding the generator's subtree, sampled from /proc."""
 
-    def __init__(self, interval: float = 0.2):
-        self.interval = interval
+    def __init__(self):
         self.exclude: set[int] = set()
         self.peak_kb = 0
         self._stop = threading.Event()
@@ -244,7 +247,7 @@ class RssSampler:
         self.peak_kb = max(self.peak_kb, total)
 
     def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(RSS_INTERVAL_S):
             self.sample()
 
     def stop(self) -> float:

@@ -6,13 +6,14 @@ Run from the repository root::
     python3 perfbench/run.py --workload backfill --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --workload all --seed 1 --seconds 10 --trace 0
 
-One run: set up ``SETUP_REPEATS`` times (Spark session on local[nproc],
-generator ready) and report the median as ``setup_s``; warm up; measure for
-``--seconds``; with ``--trace 1`` measure again with spans on; check every
-output against the generator's manifest; stop everything.  Human-readable lines go first; the last line of
-stdout is one JSON object with ``correct``, ``attempted``, ``failed`` and the
-end-to-end (``--trace 0``) or per-layer (``--trace 1``) metrics.  Spans of a
-traced run are written to ``.bench_out/``.
+One run: start the generator, then the Spark session on local[nproc], once
+and cold (a fresh process launches its JVM, as the CLI does); warm up; measure
+for ``--seconds``; with ``--trace 1`` measure again with spans on; check
+every output against the generator's manifest; stop everything.
+Human-readable lines go first; the last line of stdout is one JSON object
+with ``correct``, ``attempted``, ``failed`` and the end-to-end
+(``--trace 0``) or per-layer (``--trace 1``) metrics.  Spans of a traced run
+are written to ``.bench_out/``.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_REPEATS = 3
 WORKLOAD_NAMES = ("backfill", "live_tail")
 
 E2E_UNITS = {
@@ -96,27 +96,20 @@ def _overhead_pct(name: str, plain: dict, traced: dict) -> float:
 
 
 def run(name: str, seed: int, seconds: float, trace: bool, work: str) -> dict:
-    from harness import Generator, RssSampler, Tracer, median, start_session, stop_session
+    from harness import Generator, RssSampler, Tracer, start_session, stop_session
     from workloads import WORKLOADS
 
     rss = RssSampler().start()
     ctx = Context(work, seed, seconds, trace)
     wl = WORKLOADS[name](ctx)
-    setups = []
     try:
-        for i in range(SETUP_REPEATS):
-            if ctx.spark is not None:
-                ctx.spark.stop()
-            if ctx.gen is not None:
-                ctx.gen.stop()
-            t0 = time.perf_counter()
-            ctx.spark = start_session(work)
-            t1 = time.perf_counter()
-            ctx.gen = Generator(os.path.join(work, f"gen-{i}"), seed, wl.chain,
-                                head=wl.initial_head, dump=wl.dump)
-            rss.exclude.add(ctx.gen.proc.pid)
-            setups.append({"session": t1 - t0, "generator": time.perf_counter() - t1,
-                           "total": time.perf_counter() - t0})
+        t0 = time.perf_counter()
+        ctx.gen = Generator(os.path.join(work, "gen"), seed, wl.chain,
+                            head=wl.initial_head, dump=wl.dump)
+        rss.exclude.add(ctx.gen.proc.pid)
+        t1 = time.perf_counter()
+        ctx.spark = start_session(work)
+        generator_s, session_s = t1 - t0, time.perf_counter() - t1
 
         t0 = time.perf_counter()
         wl.warm_up()
@@ -134,14 +127,15 @@ def run(name: str, seed: int, seconds: float, trace: bool, work: str) -> dict:
             stop_session(ctx.spark)
         peak_mb = rss.stop()
 
-    e2e = dict(plain["e2e"])
-    e2e["setup_s"] = median([s["total"] for s in setups])
+    # set-up time is the program's: the benchmark's own generator is a layer
+    # metric, not part of setup_s
+    e2e = dict(plain["e2e"], setup_s=session_s)
     layers = {k: 0 for k in LAYER_UNITS}
     layers.update({
         "process.peak_rss_mb": peak_mb,
-        "setup.session_s": median([s["session"] for s in setups]),
-        "setup.cold_session_s": setups[0]["session"],
-        "setup.generator_s": median([s["generator"] for s in setups]),
+        "setup.session_s": session_s,
+        "setup.cold_session_s": session_s,
+        "setup.generator_s": generator_s,
         "setup.warmup_s": warmup_s,
     })
     if trace:

@@ -19,22 +19,33 @@ import random
 import time
 from datetime import datetime
 
+from pyspark.errors import StreamingQueryException
+
 from harness import JobCounter, median, quantile, rpc_delta
 
 #: backfill: chain length and heights per bounded job (20 pages of the
 #: source's default page size); ranges cycle through the chain
 BACKFILL_CHAIN = 3000
 BACKFILL_JOB = 400
-#: live_tail: historical warm-up leg, open-loop block rate, live warm-up and
-#: how long after a window a block may still land.  The combined flow's
+#: live_tail: historical warm-up leg (ten source partitions, so every Python
+#: worker has started before the window), open-loop block rate, live warm-up
+#: (per-batch cost falls by ~10% over the first ~8 s of the live tail)
+#: and how long after a window a block may still land.  The combined flow's
 #: backlog grew at 80 blocks/s and held at 40 on 4 cores; 20 is half the
 #: lower figure, so a slower host does not push the run near saturation,
 #: where latency stops tracking per-batch cost
-LIVE_HISTORY = 40
+LIVE_HISTORY = 200
 LIVE_RATE = 20.0
-LIVE_WARMUP_S = 6.0
+LIVE_WARMUP_S = 8.0
 LIVE_DRAIN_S = 20.0
 LIVE_WATERMARK = "10 minutes"
+#: catch-up: after the windows this many blocks are produced at once, and
+#: live_tail's blocks_per_s is how fast the flow drains them (each may take
+#: up to LIVE_CATCHUP_S to land).  The open loop cannot show capacity: below
+#: saturation each micro-batch takes what arrived during the last one, so
+#: blocks ÷ busy time reads the offered rate
+LIVE_BURST = 400
+LIVE_CATCHUP_S = 60.0
 #: lake probe: height-bucket size, query kinds and range widths (narrow and
 #: the whole backfill chain)
 LAKE_BUCKET = 500
@@ -132,8 +143,9 @@ class Backfill:
         lo, hi = self._next_range(BACKFILL_JOB)
         self._job(lo, hi, self._out_dir())
 
-    def _staged_job(self, lo: int, hi: int, out: str, tracer, counter: JobCounter, n: int) -> None:
-        """One job as three materialized stages, so each stage's self time is direct."""
+    def _staged_job(self, lo: int, hi: int, out: str, tracer, counter: JobCounter, n: int):
+        """One job as three materialized stages, so each stage's self time is
+        direct.  Returns the raw read and the job's span id."""
         from event_stream_spark.operators.flatten import assemble_stream_blocks
         from event_stream_spark.sinks.splay import write_splayed_json_batch
         from event_stream_spark.sources import blockstream
@@ -159,7 +171,14 @@ class Backfill:
             counter.set_group(f"bf{n}.splay")
             with tracer.span("sinks.splay", parent=root, trace=root):
                 write_splayed_json_batch(enriched, out)
-        # the tx_meta share: the same enrich without the protobuf decode
+        return raw, root
+
+    def _enrich_no_txmeta(self, raw, root: int, tracer, counter: JobCounter, n: int) -> None:
+        """The tx_meta share: the job's enrich again without the protobuf
+        decode, run after the job's end is taken so it is not counted in it."""
+        from event_stream_spark.operators.flatten import assemble_stream_blocks
+        from event_stream_spark.streaming.combined import parse_source_rows
+
         counter.set_group(f"bf{n}.enrich_no_txmeta")
         with tracer.span("operators.enrich_no_txmeta", trace=root):
             assemble_stream_blocks(
@@ -175,16 +194,19 @@ class Backfill:
             lo, hi = self._next_range(BACKFILL_JOB)
             job = {"lo": lo, "hi": hi, "out": self._out_dir(), "traced": tracer is not None}
             job["submit"] = time.time()
+            n, staged = len(self.jobs), None
             try:
                 if tracer is None:
                     self._job(lo, hi, job["out"])
                 else:
-                    self._staged_job(lo, hi, job["out"], tracer, counter, len(self.jobs))
+                    staged = self._staged_job(lo, hi, job["out"], tracer, counter, n)
             except Exception as exc:  # a failed job fails its blocks; the loop goes on
                 job["error"] = repr(exc)
             job["done"] = time.time()
             phase.append(job)
             self.jobs.append(job)
+            if staged is not None:
+                self._enrich_no_txmeta(*staged, tracer, counter, n)
         rpc = rpc_delta(before, gen.stats())
 
         heights = sum(j["hi"] - j["lo"] + 1 for j in phase)
@@ -255,7 +277,8 @@ class LiveTail:
     def __init__(self, ctx):
         self.ctx = ctx
         phases = 2 if ctx.trace else 1
-        self.chain = LIVE_HISTORY + int(LIVE_RATE * (LIVE_WARMUP_S + phases * ctx.seconds + 5))
+        self.ticks = int(LIVE_RATE * (LIVE_WARMUP_S + phases * ctx.seconds + 1))
+        self.chain = LIVE_HISTORY + self.ticks + LIVE_BURST
         self.out = os.path.join(ctx.work, "out", "live")
         self.sink_calls: dict[int, dict] = {}  # traced foreachBatch calls by batch id
         self.phases: list[dict] = []
@@ -299,7 +322,8 @@ class LiveTail:
             if time.time() > deadline or self.query.exception() is not None:
                 raise RuntimeError("historical leg of the combined flow did not land")
             time.sleep(0.1)
-        self.ctx.gen.advance(LIVE_RATE, self.chain - LIVE_HISTORY)
+        self.ticks_end = time.time() + self.ticks / LIVE_RATE
+        self.ctx.gen.advance(LIVE_RATE, self.ticks)
         time.sleep(LIVE_WARMUP_S)
 
     def measure(self, seconds: float, tracer=None) -> None:
@@ -317,17 +341,33 @@ class LiveTail:
         self.phases.append({"window": (t0, t1), "due": due, "rpc": rpc, "tracer": tracer,
                             "late_ms_max": after["late_ms_max"]})
 
-    def _drain_and_stop(self) -> list[str]:
-        notes = []
-        last_due = max((d for p in self.phases for d in p["due"].values()), default=time.time())
-        deadline = last_due + LIVE_DRAIN_S
-        want = {h for p in self.phases for h in p["due"]}
+    def _wait_landed(self, heights: set[int], deadline: float) -> bool:
         while time.time() < deadline and self.query.exception() is None:
-            if len(_splay_check_heights(self.out) & want) == len(want):
-                break
+            if heights <= _splay_check_heights(self.out):
+                return True
             time.sleep(0.2)
+        return False
+
+    def _catch_up(self) -> None:
+        """Once every ticked block has landed (so the ticker is done) and the
+        flow is idle, produces ``LIVE_BURST`` blocks at once and waits until
+        they land."""
+        first = LIVE_HISTORY + self.ticks + 1
+        self.burst = set(range(first, first + LIVE_BURST))
+        self.burst_deadline = time.time()
+        if self._wait_landed(set(range(LIVE_HISTORY + 1, first)), self.ticks_end + LIVE_DRAIN_S):
+            try:
+                self.query.processAllAvailable()  # the last ticked batch commits
+            except StreamingQueryException:  # reported by _stop(); the burst fails
+                return
+            self.ctx.gen.advance(1e6, LIVE_BURST)  # all due at once
+            self.burst_deadline = time.time() + LIVE_CATCHUP_S
+            self._wait_landed(self.burst, self.burst_deadline)
+
+    def _stop(self) -> list[str]:
         # read the outcome before stop(): a failure during the run shows
         # here and as missing blocks; errors raised by stopping do not
+        notes = []
         exc = self.query.exception()
         last = self.query.lastProgress
         if exc is not None:
@@ -344,16 +384,14 @@ class LiveTail:
         notes += [f"stream thread error during the run: {e}" for e in run_errors]
         notes += [f"stream thread error at stop (not a block failure): {e}" for e in stop_errors]
         self.stop_errors = len(stop_errors)
-        self.deadline = deadline
         return notes
 
-    def _complete(self, phase: dict, good: dict[int, float]) -> dict:
+    def _complete(self, phase: dict, good: dict[int, float], catch_up: float) -> dict:
         t0, t1 = phase["window"]
         lat = [(good[h] - d) * 1000.0 for h, d in phase["due"].items() if h in good]
         batches = [p for p in self.progress
                    if p.get("numInputRows", 0) > 0 and t0 <= _epoch(p["timestamp"]) < t1]
-        busy = sum(p["durationMs"].get("triggerExecution", 0) for p in batches) / 1000.0 or 1.0
-        e2e = {"blocks_per_s": sum(p["numInputRows"] for p in batches) / busy, **_latencies(lat)}
+        e2e = {"blocks_per_s": catch_up, **_latencies(lat)}
         blocks = max(len(phase["due"]), 1)
         layers = {
             "rpc.requests_per_block": phase["rpc"]["requests"] / blocks,
@@ -409,16 +447,26 @@ class LiveTail:
         }
 
     def finish(self) -> tuple[int, int, list[str]]:
-        notes = self._drain_and_stop()
-        manifest = self.ctx.gen.manifest
+        want_live = {h for p in self.phases for h in p["due"]}
+        last_due = max((d for p in self.phases for d in p["due"].values()), default=time.time())
+        deadline = last_due + LIVE_DRAIN_S
+        self._catch_up()
+        notes = self._stop()
+        manifest, due = self.ctx.gen.manifest, self.ctx.gen.stats()["due"]
         hist = _splay_check(self.out, manifest, historical=True)
         live = _splay_check(self.out, manifest, historical=False)
-        landed = {h: m for h, m in live.items() if m <= self.deadline}
-        self.results = [self._complete(p, landed) for p in self.phases]
-        want_live = {h for p in self.phases for h in p["due"]}
+        landed = {h: m for h, m in live.items() if h in want_live and m <= deadline}
+        caught = {h: m for h, m in live.items() if h in self.burst and m <= self.burst_deadline}
+        # blocks of the burst that landed ÷ time from their due time to the last
+        catch_up = 0.0
+        if caught:
+            start = min(due[str(h)] for h in self.burst)
+            catch_up = len(caught) / (max(caught.values()) - start)
+        self.results = [self._complete(p, landed, catch_up) for p in self.phases]
         want_hist = set(range(1, LIVE_HISTORY + 1))
-        attempted = len(want_live) + len(want_hist)
-        failed = len(want_live - set(landed)) + len(want_hist - set(hist))
+        attempted = len(want_live) + len(want_hist) + len(self.burst)
+        failed = (len(want_live - set(landed)) + len(want_hist - set(hist))
+                  + len(self.burst - set(caught)))
         return attempted, failed, notes
 
 
