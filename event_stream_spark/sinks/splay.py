@@ -6,7 +6,10 @@ FileOutput.kt:32-35).  Combined with the streaming offset log this gives
 effectively-once output across restarts.
 
 The path/payload computation (sha2, lpad, to_json) is JVM-side; only the
-small per-file writes run in Python, partition-parallel.  At real scale one
+small per-file writes run in Python, in at most one task per core: a Python
+task's fixed cost outweighs a few dozen small writes, so the frame is
+coalesced to the session's parallelism first (in a streaming flow that folds
+the post-dedup state partitions into one wave of tasks).  At real scale one
 file per block is the contract (the reference does exactly this); a lake-
 friendly alternative is ``partitionBy(splay)`` parquet, which callers get by
 writing ``splay_frame(df)`` with the normal file sink.
@@ -56,7 +59,8 @@ def write_splayed_json_batch(
             # partially written partition (skip-if-exists is the proof)
             claim_once(chaos_flag)
 
-    frame.foreachPartition(write_partition)
+    parallelism = batch_df.sparkSession.sparkContext.defaultParallelism
+    frame.coalesce(parallelism).foreachPartition(write_partition)
 
 
 def splayed_json_sink(stream_blocks: DataFrame, out_dir: str, checkpoint: str):

@@ -9,10 +9,11 @@ source contract IS that loop, formalized:
 - ``initialOffset``    = the ``from`` height (reference: resolved once up
                          front, MultiplexBlockDataFlow.kt:207-215)
 - ``latestOffset``     = current chain head (reference: pollingFlow tick)
-- ``partitions(a, b)`` = page-size height ranges fetched in parallel
-                         (reference: chunking + bounded concurrency — here the
-                         cluster scheduler does the fan-out)
-- ``read(partition)``  = the per-page RPC fetch (two calls per height, J1)
+- ``partitions(a, b)`` = at most one contiguous height range per core
+                         (reference: 128-height chunks × bounded ``async``
+                         fan-out, EventStream.kt:151-163 — here each Spark
+                         task is one such chunk and the scheduler fans out)
+- ``read(partition)``  = the per-range RPC fetch (two calls per height, J1)
 - checkpointed offsets subsume `Checkpoint(checkEvery=20)` (Checkpoint.kt:6-34)
 
 Rows are raw JSON pairs ``(height, block_json, block_results_json)`` — the
@@ -44,8 +45,11 @@ from pyspark.sql.datasource import (
 
 SCHEMA = "height BIGINT, block_json STRING, block_results_json STRING"
 
-#: reference TENDERMINT_MAX_QUERY_RANGE (EventStream.kt:73)
-DEFAULT_PAGE_SIZE = 20
+#: reference TENDERMINT_MAX_QUERY_RANGE (EventStream.kt:73): the page
+#: limit of the RPC *range* endpoints.  Per-height GETs never hit it, so here
+#: it is only the floor on heights per partition — below it a Python task's
+#: fixed cost outweighs its fetches
+MIN_HEIGHTS_PER_PARTITION = 20
 
 
 class HeightRange(InputPartition):
@@ -204,14 +208,18 @@ def _make_node(options: dict):
     raise ValueError(f"unknown blockstream backend: {backend}")
 
 
-def _plan(lo: int, hi: int, page: int) -> Sequence[HeightRange]:
-    """[lo, hi] inclusive → page-size ranges (reference range chunking,
-    MetadataStream.kt:59-77)."""
+def _plan(lo: int, hi: int, parallelism: int) -> Sequence[HeightRange]:
+    """[lo, hi] inclusive → at most ``parallelism`` contiguous, near-equal
+    ranges of at least ``MIN_HEIGHTS_PER_PARTITION`` heights each (one range
+    if the span is smaller): one Python task per core, not per RPC page."""
+    span = hi - lo + 1
+    n = max(1, min(parallelism, span // MIN_HEIGHTS_PER_PARTITION))
+    size, extra = divmod(span, n)
     out = []
-    h = lo
-    while h <= hi:
-        out.append(HeightRange(h, min(h + page - 1, hi)))
-        h += page
+    for i in range(n):
+        width = size + (i < extra)
+        out.append(HeightRange(lo, lo + width - 1))
+        lo += width
     return out
 
 
@@ -230,8 +238,9 @@ def _read_range(node, part: HeightRange) -> Iterator[tuple]:
 class BlockBatchReader(DataSourceReader):
     """S5 bounded historical scan."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int):
         self.options = options
+        self.parallelism = parallelism
         if "to_height" not in options:
             raise ValueError(
                 "batch blockstream scan is bounded: pass to_height "
@@ -241,10 +250,9 @@ class BlockBatchReader(DataSourceReader):
         self.hi = int(options["to_height"])
         if self.lo > self.hi:
             raise ValueError(f"from ({self.lo}) must be <= to ({self.hi})")
-        self.page = int(options.get("page_size", DEFAULT_PAGE_SIZE))
 
     def partitions(self) -> Sequence[InputPartition]:
-        return _plan(self.lo, self.hi, self.page)
+        return _plan(self.lo, self.hi, self.parallelism)
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(_make_node(self.options), partition)
@@ -261,11 +269,11 @@ class BlockStreamReader(DataSourceStreamReader):
     reports a capped head below the checkpoint for more than one poll.
     """
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int):
         self.options = options
+        self.parallelism = parallelism
         self.start = int(options.get("from_height", 1))
         self.to = int(options["to_height"]) if "to_height" in options else None
-        self.page = int(options.get("page_size", DEFAULT_PAGE_SIZE))
         # O7 throttle (the reference's buffer caps, EventStream.kt:239 /
         # MultiplexFlow.kt:74): bound each microbatch's height span so a
         # deep backlog drains in rate-limited steps instead of one giant
@@ -294,7 +302,7 @@ class BlockStreamReader(DataSourceStreamReader):
         lo, hi = start["height"] + 1, end["height"]
         if lo > hi:
             return []
-        return _plan(lo, hi, self.page)
+        return _plan(lo, hi, self.parallelism)
 
     def read(self, partition: HeightRange) -> Iterator[tuple]:
         return _read_range(self._node, partition)
@@ -304,6 +312,10 @@ class BlockStreamReader(DataSourceStreamReader):
 
 
 class BlockStreamDataSource(DataSource):
+    #: ranges planned per scan; :func:`register` sets it to the session's
+    #: ``defaultParallelism``
+    parallelism = 1
+
     @classmethod
     def name(cls) -> str:
         return "blockstream"
@@ -312,11 +324,20 @@ class BlockStreamDataSource(DataSource):
         return SCHEMA
 
     def reader(self, schema) -> DataSourceReader:
-        return BlockBatchReader(self.options)
+        return BlockBatchReader(self.options, self.parallelism)
 
     def streamReader(self, schema) -> DataSourceStreamReader:
-        return BlockStreamReader(self.options)
+        return BlockStreamReader(self.options, self.parallelism)
 
 
 def register(spark) -> None:
-    spark.dataSource.register(BlockStreamDataSource)
+    """Register ``format("blockstream")`` sized to ``spark``'s cores.
+
+    The subclass is defined here, not at module level, so cloudpickle ships
+    it by value: the captured parallelism reaches the Python process that
+    plans partitions, and every read gets it without an option."""
+
+    class SizedBlockStreamDataSource(BlockStreamDataSource):
+        parallelism = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(SizedBlockStreamDataSource)

@@ -7,8 +7,9 @@ AFTER it has published partial output — must leave the final output
 with no duplicate and no torn file, byte-identical to an unchaosed run.
 
 Runs as a standalone process because the shared pytest session is
-``local[32]`` (maxFailures=1, task retries disabled); pytest drives it
-via subprocess (tests/test_streaming.py::test_task_retry_chaos_sinks).
+``local[$SPARK_GRAFT_CPUS]`` (default 8; maxFailures=1, task retries
+disabled); pytest drives it via subprocess
+(tests/test_streaming.py::test_task_retry_chaos_sinks).
 
 Covered sinks:
 - splay JSON file sink  (skip-if-exists + write-then-rename per file)

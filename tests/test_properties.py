@@ -89,6 +89,30 @@ def test_count_windows_bounded(spark, present, size):
 
 
 @given(
+    lo=st.integers(min_value=0, max_value=10**7),
+    span=st.integers(min_value=1, max_value=5000),
+    parallelism=st.integers(min_value=1, max_value=64),
+)
+@settings(max_examples=200, deadline=None)
+def test_blockstream_plan_one_range_per_core(lo, span, parallelism):
+    """The source planner covers [lo, hi] with contiguous ranges, each
+    height once, in at most ``parallelism`` ranges of at least
+    ``MIN_HEIGHTS_PER_PARTITION`` heights unless the span is smaller."""
+    from event_stream_spark.sources.blockstream import MIN_HEIGHTS_PER_PARTITION, _plan
+
+    hi = lo + span - 1
+    ranges = [(r.lo, r.hi) for r in _plan(lo, hi, parallelism)]
+    assert 1 <= len(ranges) <= parallelism
+    assert ranges[0][0] == lo and ranges[-1][1] == hi
+    for (_, prev_hi), (next_lo, _) in zip(ranges, ranges[1:]):
+        assert next_lo == prev_hi + 1
+    widths = [b - a + 1 for a, b in ranges]
+    assert sum(widths) == span
+    assert min(widths) >= min(span, MIN_HEIGHTS_PER_PARTITION)
+    assert max(widths) - min(widths) <= 1
+
+
+@given(
     n_hot=st.integers(min_value=0, max_value=30),
     salt_n=st.integers(min_value=1, max_value=8),
 )

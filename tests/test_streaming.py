@@ -78,6 +78,39 @@ def test_bad_range_rejected(spark):
         )
 
 
+def test_batch_source_one_partition_per_core(spark):
+    """After ``register(spark)`` a plain ``spark.read`` plans one height
+    range per core (20 heights at least), each height read once."""
+    from event_stream_spark.sources import blockstream
+
+    blockstream.register(spark)
+    df = (
+        spark.read.format("blockstream")
+        .options(backend="synthetic", from_height="1", to_height="400")
+        .load()
+    )
+    assert df.rdd.getNumPartitions() == min(spark.sparkContext.defaultParallelism, 20)
+    heights = sorted(r["height"] for r in df.select("height").collect())
+    assert heights == list(range(1, 401))
+
+
+def test_streaming_backlog_one_partition_per_core(spark):
+    """A 400-height streaming backlog is planned like the batch scan."""
+    from event_stream_spark.sources import blockstream
+
+    blockstream.register(spark)
+    stream = (
+        spark.readStream.format("blockstream")
+        .options(backend="synthetic", from_height="1", to_height="400")
+        .load()
+        .select("height", F.spark_partition_id().alias("pid"))
+    )
+    _drain(stream.writeStream.format("memory").queryName("backlog_plan"))
+    rows = spark.table("backlog_plan").collect()
+    assert sorted(r["height"] for r in rows) == list(range(1, 401))
+    assert len({r["pid"] for r in rows}) == min(spark.sparkContext.defaultParallelism, 20)
+
+
 def test_streaming_source_and_resume(spark, tmp_path):
     """Kill + restart from checkpoint while the chain head grows: the resumed
     query emits exactly the new heights — no dupes, no gaps (§2.9)."""
@@ -170,6 +203,63 @@ def test_splayed_json_sink(spark, tmp_path):
     write_splayed_json_batch(sb, out)
     after = {f: os.path.getmtime(f) for f in glob.glob(f"{out}/*/*.json")}
     assert before == after
+
+
+def test_combined_splay_sink_restart(spark, tmp_path):
+    """The stateful combined flow through the splay sink (its post-dedup
+    partitions coalesced to the session's parallelism), stopped and
+    restarted from its checkpoint with ``to_height`` raised: one file per
+    height, the right ``historical`` flag, no temp file left."""
+    from event_stream_spark.sinks import splayed_json_sink
+    from event_stream_spark.streaming import combined_block_stream
+
+    out, ckpt = str(tmp_path / "splay"), str(tmp_path / "ckpt")
+
+    def run(to_height: int, head: int) -> None:
+        flow = combined_block_stream(
+            spark, 1, to_height, backend="synthetic", synthetic_head=head,
+            watermark="10 minutes",
+        )
+        _drain(splayed_json_sink(flow, out, ckpt))
+
+    run(40, 60)  # history 1..40, live 41..60
+    run(60, 100)  # history resumes at 41 (already live, deduped), live 61..100
+    files = glob.glob(f"{out}/*/*")
+    assert all(f.endswith(".json") for f in files), files
+    flags = {}
+    for path in files:
+        with open(path) as fh:
+            block = json.load(fh)
+        assert os.path.basename(path) == f"{block['height']:010d}.json"
+        flags[block["height"]] = block["historical"]
+    assert len(files) == 100
+    assert flags == {h: h <= 40 for h in range(1, 101)}
+
+
+def test_stateful_checkpoint_spawns_no_process_per_path(spark, tmp_path):
+    """A watermarked dedup micro-batch commits 8 state partitions plus its
+    offset and commit logs.  Without Hadoop's native library the FileContext
+    checkpoint manager shells out to ``readlink`` for every path it stats
+    (~370 process spawns per micro-batch); the session's FileSystem manager
+    leaves only the ``chmod`` of each file it creates."""
+    if not os.path.exists("/proc/stat"):
+        pytest.skip("counts process spawns from Linux /proc/stat")
+    from event_stream_spark.streaming import dedup_heights_stream, live_stream
+
+    def spawned() -> int:
+        with open("/proc/stat") as fh:
+            return next(int(line.split()[1]) for line in fh if line.startswith("processes "))
+
+    flow = dedup_heights_stream(
+        live_stream(spark, from_height=1, to_height=200, max_heights_per_trigger=20,
+                    backend="synthetic", decode_tx_meta=False),
+        watermark="10 minutes",
+    )
+    writer = flow.writeStream.format("noop").option("checkpointLocation", str(tmp_path / "ckpt"))
+    before = spawned()
+    q = _drain(writer)
+    per_batch = (spawned() - before) / len([p for p in q.recentProgress if p["numInputRows"]])
+    assert per_batch < 200, per_batch
 
 
 def test_kafka_frame_contract(spark):
